@@ -1,7 +1,7 @@
 """Arrow-batched UDFs for the extraction stages.
 
-The hot path is ``decode_media``: one ``mapInPandas`` stage that runs
-det (DB binarize + box post-process, ``toddleocr/postprocess/db.py``),
+The hot path is ``decode_media_store``: one ``mapInPandas`` stage that
+runs det (DB binarize + box post-process, ``toddleocr/postprocess/db.py``),
 reading-order sort (``utils/utility.py:170-192``), cls decode
 (``postprocess/cls.py``), CTC rec decode (``postprocess/rec.py``) and
 table-structure decode + match (``postprocess/table.py``,
@@ -17,7 +17,7 @@ only small string fragments leave this stage.
 
 from __future__ import annotations
 
-__all__ = ["MEDIA_FRAGMENT_SCHEMA", "ERROR_KIND", "decode_media",
+__all__ = ["MEDIA_FRAGMENT_SCHEMA", "ERROR_KIND", "decode_media_store",
            "decode_errors", "write_store_manifest", "manifest_path"]
 
 # out_kind of quarantined poison rows (decode raised); never a real
@@ -93,23 +93,8 @@ def _broadcast_bundle(spark):
     return spark.sparkContext.broadcast(MODEL_BUNDLE)
 
 
-def decode_media(media_df, repartition: int | None = None):
-    """media store DataFrame → fragment DataFrame.
-
-    ``repartition`` round-robins the (unkeyed) media rows so decode cost
-    spreads evenly across executors regardless of upstream file layout —
-    the fixture-world analogue of the reference's DataLoader sharding.
-    """
-    df = media_df.select(*_MEDIA_COLS)
-    if repartition:
-        df = df.repartition(repartition)
-    bc = _broadcast_bundle(media_df.sparkSession)
-    return df.mapInPandas(_make_decode_batches(bc),
-                          schema=MEDIA_FRAGMENT_SCHEMA)
-
-
 # ---------------------------------------------------------------------------
-# Fast path: pointer-passing media decode.
+# Pointer-passing media decode: the only way media reaches the UDF.
 #
 # Shipping ~60 KB of tensor bytes per row from the JVM to Python through
 # the Arrow python-runner measures at ~8 MB/s/core (the row-to-Arrow
@@ -143,19 +128,14 @@ def write_store_manifest(spark, store_path: str):
     (toddleocr/datasets/lmdb.py:51-65) — so query planning reads a
     table instead of listing the filesystem. The driver-side listing
     below runs only here, at write time (the Iceberg-commit analogue);
-    footers are read executor-side. At real manifest scale (millions
-    of files) this table is itself partitioned parquet — still never
-    O(files) driver memory at PLAN time."""
+    footers are read executor-side. Planning reads this table back on
+    the driver (``_store_files_df``)."""
     import os as _os
 
-    files = _list_store_files(store_path)
-    names = [_os.path.basename(f) for f in files]
-    # degenerate stores: a single parquet FILE is a valid store
-    # (_list_store_files supports it) — footers must open the file
-    # itself, not <file>/<file>; an empty store still writes an empty
-    # manifest rather than crashing repartition(0)
-    root = (_os.path.dirname(store_path)
-            if _os.path.isfile(store_path) else store_path)
+    names = [_os.path.basename(f) for f in _list_store_files(store_path)]
+    # an empty store still writes an empty manifest rather than
+    # crashing repartition(0)
+    root = _store_root(store_path)
 
     def footer(batches):
         import os as _os2
@@ -180,10 +160,17 @@ def write_store_manifest(spark, store_path: str):
      .write.mode("overwrite").parquet(manifest_path(store_path)))
 
 
+def _store_root(store_path: str) -> str:
+    """Directory the manifest's relative file names resolve against: a
+    single parquet FILE is a valid store, so its root is its parent."""
+    import os as _os
+
+    return (_os.path.dirname(store_path) if _os.path.isfile(store_path)
+            else store_path).rstrip("/")
+
+
 def _list_store_files(path: str) -> list[str]:
-    """Driver-side glob fallback — used at manifest WRITE time and for
-    ad-hoc stores that never wrote one (tests, single files). The hot
-    query path plans from the manifest table instead."""
+    """The store's data files, listed once by write_store_manifest."""
     import glob as _glob
     import os as _os
 
@@ -192,72 +179,47 @@ def _list_store_files(path: str) -> list[str]:
     return sorted(_glob.glob(_os.path.join(path, "*.parquet")))
 
 
-# back-compat alias (tests exercise the fallback path by this name)
-list_store_files = _list_store_files
-
-
 def _store_files_df(spark, store_path: str, n_tasks: int):
     """DataFrame of data-file paths, packed into byte-balanced tasks.
 
-    Manifest path (the default): read the manifest TABLE, assign each
-    file a task id by its start offset in the cumulative-bytes order,
-    and range-partition on it — planning is a tiny Spark job over one
-    row per file, never an O(files) driver listing, and task sizes
-    track bytes (a skewed file-size distribution still packs evenly).
+    The driver reads the manifest table with pyarrow, walks the files
+    in name order and gives each the task ``cum_bytes * n_tasks //
+    total_bytes`` of its start offset, so every task holds a contiguous
+    byte range and a skewed file-size distribution still packs evenly.
+    Each task's paths become exactly one partition of the returned
+    DataFrame: planning runs no Spark job and adds no Exchange.
 
-    The cumulative sum is a DISTRIBUTED prefix sum, not a global-order
-    window: files hash into ``n_tasks`` chunks, the running sum within
-    a chunk is a partitioned window, and each chunk's starting offset
-    comes from the tiny per-chunk byte totals (one row per chunk,
-    broadcast back). Packing only needs SOME deterministic total order
-    for contiguous byte ranges — (chunk, file) is as good as (file) —
-    so no stage ever holds more than ~files/n_tasks rows in one
-    partition, and a million-file manifest plans without a
-    single-partition sort.
+    Packing on the driver is enough because a store holds 8-256 data
+    files, one manifest row each; Iceberg's Spark scan also plans its
+    file tasks from manifest entries on the driver. A store without a
+    manifest raises rather than falling back to listing the filesystem.
     """
     import os as _os
 
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
+    import pyarrow.parquet as pq
 
     man = manifest_path(store_path)
-    if _os.path.exists(_os.path.join(man, "_SUCCESS")):
-        chunk = F.pmod(F.xxhash64("file"), F.lit(n_tasks)).alias("chunk")
-        man_df = spark.read.parquet(man).withColumn("chunk", chunk)
-        # per-chunk byte totals: <= n_tasks rows; the offset window runs
-        # over this TINY table only (bounded by task count, not files)
-        per_chunk = (man_df.groupBy("chunk")
-                     .agg(F.sum("n_bytes").alias("chunk_bytes")))
-        w_off = Window.orderBy("chunk")
-        offsets = (per_chunk
-                   .withColumn("chunk_off",
-                               F.sum("chunk_bytes").over(w_off)
-                               - F.col("chunk_bytes"))
-                   .crossJoin(F.broadcast(
-                       per_chunk.agg(F.sum("chunk_bytes")
-                                     .alias("tot_bytes"))))
-                   .select("chunk", "chunk_off", "tot_bytes"))
-        w_local = Window.partitionBy("chunk").orderBy("file")
-        return (man_df
-                .join(F.broadcast(offsets), "chunk")
-                .withColumn("cum",
-                            F.col("chunk_off")
-                            + F.sum("n_bytes").over(w_local)
-                            - F.col("n_bytes"))
-                .withColumn("task",
-                            F.floor(F.col("cum") * n_tasks
-                                    / F.greatest(F.col("tot_bytes"),
-                                                 F.lit(1))))
-                .select(F.concat(
-                    F.lit((_os.path.dirname(store_path)
-                           if _os.path.isfile(store_path)
-                           else store_path).rstrip("/") + "/"),
-                    F.col("file")).alias("path"), "task")
-                .repartitionByRange(n_tasks, "task")
-                .select("path"))
-    files = _list_store_files(store_path)
-    return (spark.createDataFrame([(f,) for f in files], "path string")
-            .repartition(max(1, min(len(files), n_tasks))))
+    if not _os.path.exists(_os.path.join(man, "_SUCCESS")):
+        raise ValueError(
+            f"media store {store_path!r} has no manifest at {man!r}; "
+            "write one with write_store_manifest(spark, store_path)")
+    table = pq.read_table(man, columns=["file", "n_bytes"])
+    files = sorted(zip(table.column("file").to_pylist(),
+                       table.column("n_bytes").to_pylist()))
+    total = max(1, sum(n for _, n in files))
+    root = _store_root(store_path)
+    tasks = [[] for _ in range(n_tasks)]
+    cum = 0
+    for name, n_bytes in files:
+        tasks[cum * n_tasks // total].append((f"{root}/{name}",))
+        cum += n_bytes
+    tasks = [t for t in tasks if t]
+    # an RDD, not a literal over spark.range: a relation with a known
+    # tiny size would let the planner broadcast the decode output in
+    # the fragments join
+    rdd = (spark.sparkContext.parallelize(tasks, max(1, len(tasks)))
+           .flatMap(lambda t: t))
+    return spark.createDataFrame(rdd, "path string")
 
 
 def map_media_store(spark, store_path: str, batch_fn, schema,

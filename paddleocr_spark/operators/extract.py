@@ -48,14 +48,10 @@ Scale design notes (the parts that matter at 10^12 docs):
 from __future__ import annotations
 
 from paddleocr_spark.corpus import BOILERPLATE_RE
-from paddleocr_spark.functions.udfs import (
-    ERROR_KIND,
-    decode_media,
-    decode_media_store,
-)
+from paddleocr_spark.functions.udfs import ERROR_KIND, decode_media_store
 
 __all__ = ["explode_spans", "clean_text_col", "extract_spans",
-           "SALT_WIDTH"]
+           "resolve_salt_width", "SALT_WIDTH"]
 
 # Default offset-bucket width for the salted per-doc ordering: docs
 # with fewer spans see a single bucket (plain-window behavior); a
@@ -83,41 +79,47 @@ def explode_spans(docs_df):
             .select("doc_id", "s.kind", "s.text", "s.media_ref", "s.offset"))
 
 
-def extract_spans(docs_df, media, decode_partitions: int | None = None,
+def resolve_salt_width(docs_df, salt_width: int | str = "auto") -> int:
+    """The per-doc ordering's offset-bucket width. "auto" runs one
+    max(size(spans)) job and picks SALT_WIDTH only when some doc
+    exceeds it, else 0 (the plain per-doc window); an int is returned
+    as given."""
+    if salt_width != "auto":
+        return salt_width
+    from pyspark.sql import functions as F
+
+    max_spans = docs_df.agg(F.max(F.size("spans"))).first()[0] or 0
+    return SALT_WIDTH if max_spans > SALT_WIDTH else 0
+
+
+def extract_spans(docs_df, media_store: str,
                   salt_width: int | str = "auto",
                   keep_offset: bool = False,
                   fragments_df=None):
     """docs + media store → ordered span rows
     (doc_id, order, kind, text, media_ref, conf).
 
-    ``media`` is either a DataFrame (generic path: tensors cross the
-    JVM→Python Arrow boundary — fine for small stores) or a parquet
-    store path (fast pointer-passing path: tasks read their split
-    directly with pyarrow; see functions/udfs.py).
+    ``media_store`` is a parquet store path with a manifest
+    (functions/udfs.py ``write_store_manifest``): tasks read their
+    split directly with pyarrow, so the tensor columns never pass
+    through the JVM.
 
     ``salt_width``: "auto" (default) enables the salted two-phase
-    ordering only when some doc exceeds SALT_WIDTH spans (one cheap
-    max-statistic job decides — see module docstring); an int > 0
-    forces that bucket width; 0 forces the plain per-doc window.
-    All three produce identical output. ``keep_offset`` retains the
+    ordering only when some doc exceeds SALT_WIDTH spans
+    (``resolve_salt_width``); an int > 0 forces that bucket width; 0
+    forces the plain per-doc window. All three produce identical
+    output. ``keep_offset`` retains the
     source span offset column (skew-study instrumentation: rows per
-    sort task are counted per (doc_id, floor(offset/salt_width)))."""
+    sort task are counted per (doc_id, floor(offset/salt_width))).
+    ``fragments_df`` supplies already-decoded fragments of the store
+    (the checkpoint loop decodes the store ONCE and shares it across
+    buckets instead of paying the dominant decode cost per bucket)."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    if salt_width == "auto":
-        max_spans = docs_df.agg(
-            F.max(F.size("spans")).alias("m")).collect()[0]["m"] or 0
-        salt_width = SALT_WIDTH if max_spans > SALT_WIDTH else 0
-    if fragments_df is not None:
-        # pre-decoded fragments (the checkpoint loop decodes the store
-        # ONCE and shares it across buckets instead of paying the
-        # dominant decode cost per bucket)
-        fragments = fragments_df
-    elif isinstance(media, str):
-        fragments = decode_media_store(docs_df.sparkSession, media)
-    else:
-        fragments = decode_media(media, repartition=decode_partitions)
+    salt_width = resolve_salt_width(docs_df, salt_width)
+    fragments = (fragments_df if fragments_df is not None
+                 else decode_media_store(docs_df.sparkSession, media_store))
     frags = fragments.select(
         F.col("media_ref").alias("join_key"),
         # second join key: fragments only ever match MEDIA spans — a

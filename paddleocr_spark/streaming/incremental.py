@@ -20,8 +20,8 @@ __all__ = ["incremental_extract", "windowed_event_counts",
            "streaming_page_ingest", "streaming_partitioned_events"]
 
 
-def incremental_extract(spark, docs_dir: str, media_df, out_dir: str,
-                        checkpoint_dir: str):
+def incremental_extract(spark, docs_dir: str, media_store: str,
+                        out_dir: str, checkpoint_dir: str):
     """Start a stream: new parquet files under ``docs_dir`` →
     extract_spans → epoch-partitioned write to ``out_dir``. Returns the
     StreamingQuery (caller drives it; tests use processAllAvailable()).
@@ -38,17 +38,17 @@ def incremental_extract(spark, docs_dir: str, media_df, out_dir: str,
     by the number of batches."""
     from pyspark.sql import functions as F
 
-    from paddleocr_spark.functions.udfs import decode_media
+    from paddleocr_spark.functions.udfs import decode_media_store
     from paddleocr_spark.operators._cache import eager_persist
 
-    fragments = eager_persist(decode_media(media_df))
+    fragments = eager_persist(decode_media_store(spark, media_store))
     stream = (spark.readStream
               .schema(docs_schema())
               .option("maxFilesPerTrigger", 8)
               .parquet(docs_dir))
 
     def process(batch_df, epoch_id: int):
-        (extract_spans(batch_df, media_df, fragments_df=fragments)
+        (extract_spans(batch_df, media_store, fragments_df=fragments)
          .withColumn("epoch", F.lit(int(epoch_id)))
          .write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")

@@ -27,6 +27,10 @@ import json
 import sys
 
 
+def _salt_width(value: str) -> int | str:
+    return value if value == "auto" else int(value)
+
+
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--docs", required=True,
@@ -35,10 +39,11 @@ def main(argv=None) -> int:
     ap.add_argument("--out", required=True, help="output directory")
     ap.add_argument("--run-id", default="run1")
     ap.add_argument("--buckets", type=int, default=8)
-    ap.add_argument("--salt-width", type=int, default=None,
+    ap.add_argument("--salt-width", type=_salt_width, default="auto",
                     help="offset-bucket width for the salted per-doc "
-                         "ordering (default extract_spans.SALT_WIDTH; "
-                         "0 = plain per-doc window)")
+                         "ordering: 'auto' (default; salted only when "
+                         "some doc exceeds extract.SALT_WIDTH spans), an "
+                         "int width, or 0 = plain per-doc window")
     ap.add_argument("--shuffle-partitions", type=int, default=None)
     args = ap.parse_args(argv)
 

@@ -5,7 +5,7 @@ path (IoU geometry / token equality) beside span-sequence equality."""
 import pytest
 
 import __spark_entry__ as entry_mod
-from paddleocr_spark.functions.udfs import decode_media
+from paddleocr_spark.functions.udfs import decode_media_store
 from paddleocr_spark.operators import metrics
 
 SF = "/root/testdata/sf0.001"
@@ -17,8 +17,14 @@ def media(spark):
     return m
 
 
-def test_corpus_rec_metric_perfect(spark, media):
-    row = metrics.corpus_rec_metric(media, decode_media(media)).collect()[0]
+@pytest.fixture(scope="module")
+def fragments(spark):
+    _, media_path = entry_mod.corpus_paths(spark, SF, n_docs=80)
+    return decode_media_store(spark, media_path)
+
+
+def test_corpus_rec_metric_perfect(spark, media, fragments):
+    row = metrics.corpus_rec_metric(media, fragments).collect()[0]
     assert row.all_num > 0
     # only rows dropped by DROP_SCORE/empty-text may miss; the rest
     # must match exactly
@@ -32,8 +38,8 @@ def test_det_iou_metric_perfect(spark, media):
     assert row.precision == 1.0 and row.recall == 1.0 and row.hmean == 1.0
 
 
-def test_table_structure_metric_perfect(spark, media):
-    row = metrics.table_structure_metric(media, decode_media(media)).collect()[0]
+def test_table_structure_metric_perfect(spark, media, fragments):
+    row = metrics.table_structure_metric(media, fragments).collect()[0]
     assert row.all_num > 0
     assert row.acc == 1.0
 

@@ -20,10 +20,10 @@ def _golden_key_rows(golden):
 
 
 @pytest.fixture(scope="module")
-def pipeline_result(spark):
+def pipeline_result(spark, media_store):
     docs = synthesize_docs(spark, N_DOCS, seed=SEED, heavy_frac=HEAVY)
-    media = synthesize_media(spark, docs, seed=SEED)
-    out = extract_spans(docs, media).collect()
+    store = media_store(synthesize_media(spark, docs, seed=SEED))
+    out = extract_spans(docs, store).collect()
     _, _, golden = golden_corpus(N_DOCS, seed=SEED, heavy_frac=HEAVY)
     return out, golden
 
@@ -41,33 +41,40 @@ def test_confidences_match(pipeline_result):
     assert got == want
 
 
-def test_partition_count_independence(spark):
+def test_partition_count_independence(spark, media_store):
     """Same results at different parallelism (FIXTURES.md §3 invariant:
-    local[2]-vs-local[8] analogue via shuffle partition counts)."""
+    local[2]-vs-local[8] analogue via docs partition counts and the
+    media store's data-file count, which sets the decode tasks)."""
+    import glob
+    import os
+
     docs = synthesize_docs(spark, 15, seed=7, heavy_frac=0.0)
     media = synthesize_media(spark, docs, seed=7)
-    a = extract_spans(docs.repartition(1), media.repartition(1)).collect()
+    one, five = media_store(media, n_files=1), media_store(media, n_files=5)
+    n_files = lambda store: len(glob.glob(os.path.join(store, "*.parquet")))
+    assert (n_files(one), n_files(five)) == (1, 5)
+    a = extract_spans(docs.repartition(1), one).collect()
     # salt_width=3 forces multi-bucket salted ordering even on these
     # small docs (every doc with >3 spans spans several buckets)
-    b = extract_spans(docs.repartition(7), media.repartition(5),
-                      decode_partitions=3, salt_width=3).collect()
+    b = extract_spans(docs.repartition(7), five, salt_width=3).collect()
     key = lambda rows: sorted((r.doc_id, r.order, r.kind, r.text, r.media_ref)
                               for r in rows)
     assert key(a) == key(b)
 
 
-def test_salted_ordering_equals_window_on_pathological_doc(spark):
+def test_salted_ordering_equals_window_on_pathological_doc(spark,
+                                                            media_store):
     """The salted two-phase ordering must be bit-identical to the
     plain per-doc window, including on a pathological media-heavy doc
     that spans many offset buckets (the skew case it exists for)."""
     docs = synthesize_docs(spark, 10, seed=11, heavy_frac=0.0,
                            patho_docs=1, patho_spans=3000, patho_pool=4)
-    media = synthesize_media(spark, docs, seed=11)
+    store = media_store(synthesize_media(spark, docs, seed=11))
     rows = lambda out: sorted(
         (r.doc_id, r.order, r.kind, r.text, r.media_ref, round(r.conf, 9))
         for r in out)
-    plain = rows(extract_spans(docs, media, salt_width=0).collect())
-    salted = rows(extract_spans(docs, media, salt_width=256).collect())
+    plain = rows(extract_spans(docs, store, salt_width=0).collect())
+    salted = rows(extract_spans(docs, store, salt_width=256).collect())
     assert plain == salted
     # the pathological doc really exercised multiple buckets
     assert sum(r[0].startswith("patho") for r in plain) > 256
@@ -117,32 +124,6 @@ def test_order_is_dense_per_doc(pipeline_result):
         assert sorted(orders) == list(range(len(orders)))
 
 
-def test_fast_path_equals_generic_path(spark, tmp_path):
-    """Pointer-passing decode (decode_media_store) must equal the
-    generic DataFrame path row-for-row."""
-    from paddleocr_spark.functions.udfs import decode_media, decode_media_store
-
-    docs = synthesize_docs(spark, 12, seed=21, heavy_frac=0.0)
-    media = synthesize_media(spark, docs, seed=21, partitions=3)
-    store = str(tmp_path / "media_store")
-    media.write.mode("overwrite").parquet(store)
-    media_df = spark.read.parquet(store)
-
-    key = lambda rows: sorted((r.media_ref, r.box_idx, r.out_kind,
-                               r.out_text, round(r.conf, 9), r.aux)
-                              for r in rows)
-    a = key(decode_media(media_df).collect())
-    b = key(decode_media_store(spark, store).collect())
-    assert a == b
-
-    # extract_spans accepts either form with identical results
-    ra = extract_spans(docs, media_df).collect()
-    rb = extract_spans(docs, store).collect()
-    k2 = lambda rows: sorted((r.doc_id, r.order, r.kind, r.text,
-                              r.media_ref) for r in rows)
-    assert k2(ra) == k2(rb)
-
-
 def test_model_bundle_roundtrip():
     """The broadcast model bundle must resolve to exactly the module
     defaults — otherwise the Spark decode (bundle path) and the
@@ -159,7 +140,7 @@ def test_model_bundle_roundtrip():
     assert resolve_bundle(None) == (_CHARSET, DROP_SCORE)
 
 
-def test_poison_media_row_quarantined(spark):
+def test_poison_media_row_quarantined(spark, media_store):
     """A corrupt media row must not kill the decode job: it becomes an
     ERROR_KIND fragment (countable via decode_errors), is excluded
     from span assembly, and every other row decodes unchanged."""
@@ -168,20 +149,20 @@ def test_poison_media_row_quarantined(spark):
     from paddleocr_spark.functions.udfs import (
         ERROR_KIND,
         decode_errors,
-        decode_media,
+        decode_media_store,
     )
 
     docs = synthesize_docs(spark, 8, seed=33, heavy_frac=0.0)
     media = synthesize_media(spark, docs, seed=33, partitions=2)
     victim = media.select("media_ref").orderBy("media_ref").first()[0]
     # truncate the victim's det_map so dequantize/reshape raises
-    poisoned = media.withColumn(
+    poisoned = media_store(media.withColumn(
         "det_map",
         F.when(F.col("media_ref") == victim,
                F.substring(F.col("det_map"), 1, 3))
-        .otherwise(F.col("det_map")))
+        .otherwise(F.col("det_map"))))
 
-    frags = decode_media(poisoned)
+    frags = decode_media_store(spark, poisoned)
     errs = decode_errors(frags).collect()
     assert [e["media_ref"] for e in errs] == [victim]
     assert errs[0]["error"]  # non-empty reason string
@@ -190,7 +171,7 @@ def test_poison_media_row_quarantined(spark):
     key = lambda rows: sorted((r.media_ref, r.box_idx, r.out_kind,
                                r.out_text, round(r.conf, 9))
                               for r in rows if r.media_ref != victim)
-    clean = decode_media(media).collect()
+    clean = decode_media_store(spark, media_store(media)).collect()
     assert key([r for r in frags.collect()
                 if r.out_kind != ERROR_KIND]) == key(clean)
 
@@ -223,7 +204,7 @@ def test_clean_text_python_twin_matches_spark_on_control_chars(spark):
     assert got == want, list(zip(cases, got, want))
 
 
-def test_duplicate_offsets_order_deterministically(spark):
+def test_duplicate_offsets_order_deterministically(spark, media_store):
     """The schema allows two spans at the SAME offset; the ordering
     tie must break deterministically (kind/media_ref/text tiebreak) and
     identically on the plain and salted paths."""
@@ -231,7 +212,7 @@ def test_duplicate_offsets_order_deterministically(spark):
     from paddleocr_spark.operators.extract import extract_spans
 
     docs = synthesize_docs(spark, 4, seed=7, heavy_frac=0.0)
-    media = synthesize_media(spark, docs, seed=7)
+    store = media_store(synthesize_media(spark, docs, seed=7))
     dup = spark.createDataFrame(
         [("dup_doc", [("text", "zz ties last", "", 5),
                       ("text", "aa ties first", "", 5),
@@ -240,11 +221,11 @@ def test_duplicate_offsets_order_deterministically(spark):
 
     key = lambda df: sorted((r.doc_id, r.order, r.kind, r.text,
                              r.media_ref) for r in df.collect())
-    plain = key(extract_spans(docs2, media, salt_width=0))
-    salted = key(extract_spans(docs2, media, salt_width=2))
+    plain = key(extract_spans(docs2, store, salt_width=0))
+    salted = key(extract_spans(docs2, store, salt_width=2))
     assert plain == salted
     dup_rows = [(o, t) for (d, o, k, t, m) in plain if d == "dup_doc"]
     assert dup_rows == [(0, "aa ties first"), (1, "mm ties mid"),
                         (2, "zz ties last")]
     # and stable across repeated runs
-    assert plain == key(extract_spans(docs2, media, salt_width=0))
+    assert plain == key(extract_spans(docs2, store, salt_width=0))

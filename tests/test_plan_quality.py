@@ -52,12 +52,13 @@ def test_revenue_by_region_all_broadcast(spark):
 
 
 def test_extract_shuffle_budget(spark):
-    """Flagship extract: fragments join + final per-doc window; the
-    fat tensor columns must not appear past the decode stage."""
-    docs, media = entry_mod.load_corpus(spark, SF, n_docs=50)
+    """Flagship extract on the production media-store path: fragments
+    join + final per-doc window; the fat tensor columns must not
+    appear past the decode stage."""
+    docs_path, media_path = entry_mod.corpus_paths(spark, SF, n_docs=50)
     from paddleocr_spark.operators.extract import extract_spans
 
-    df = extract_spans(docs, media)
+    df = extract_spans(spark.read.parquet(docs_path), media_path)
     import re
 
     from paddleocr_spark.plans.inspect import formatted_plan
@@ -74,56 +75,86 @@ def test_extract_shuffle_budget(spark):
     # shuffles: media distinct-refs side, join, window partition —
     # bounded, not data-dependent
     assert count_exchanges(df) <= 5
+    # the decode output is never planned as a broadcast build side (a
+    # left outer join can only build its right side, the fragments)
+    assert "BroadcastHashJoin" not in plan
 
 
-def test_media_store_planning_from_manifest(spark):
-    """Store decode must plan from the manifest TABLE (a parquet scan
-    of <store>/_manifest), not a driver-side file glob — the
-    self-managed Iceberg-manifest stand-in. The store's fat data files
-    must NOT appear as a Catalyst FileScan (they are read executor-side
-    via pyarrow pointer passing)."""
+def test_media_store_planning_from_manifest(spark, tmp_path):
+    """Store decode plans from the manifest alone: no Catalyst scan
+    points at the media data directory (its files are read
+    executor-side via pyarrow pointer passing), and a stray parquet
+    file left in a copy of the store but missing from its manifest is
+    never read."""
     import os as _os
+    import re
+    import shutil
+
+    import pyarrow.parquet as pq
 
     from paddleocr_spark.functions.udfs import (
         decode_media_store,
         manifest_path,
+        map_media_store,
     )
     from paddleocr_spark.plans.inspect import formatted_plan
 
     _, media_path = entry_mod.corpus_paths(spark, SF, n_docs=50)
-    assert _os.path.exists(_os.path.join(manifest_path(media_path),
-                                         "_SUCCESS"))
-    df = decode_media_store(spark, media_path)
-    plan = formatted_plan(df)
-    # every Catalyst file scan points at the manifest table; the media
-    # data dir never appears as a scan location (its files are read
-    # executor-side inside the mapInPandas)
-    import re
-
+    plan = formatted_plan(decode_media_store(spark, media_path))
     locs = re.findall(r"Location: \S+ \[([^\]]*)\]", plan)
-    assert locs and all("media_manifest" in loc for loc in locs), plan
+    assert not [loc for loc in locs
+                if loc.rstrip("/").endswith(media_path.rstrip("/"))], plan
+
+    copy = str(tmp_path / "media")
+    shutil.copytree(media_path, copy)
+    shutil.copytree(manifest_path(media_path), manifest_path(copy))
+    first = sorted(f for f in _os.listdir(copy) if f.endswith(".parquet"))[0]
+    stray = _os.path.join(copy, "part-99999-stray.parquet")
+    shutil.copy(_os.path.join(copy, first), stray)
+    assert pq.ParquetFile(stray).metadata.num_rows > 0
+
+    def refs(store):
+        return sorted(r.media_ref for r in map_media_store(
+            spark, store, lambda batches: batches, "media_ref string",
+            columns=["media_ref"]).collect())
+
+    assert refs(copy) == refs(media_path)
 
 
-def test_manifest_packing_has_no_global_file_window(spark):
-    """The byte-balanced task packing must compute its cumulative sum
-    as a distributed prefix sum: any window ordered over the per-FILE
-    rows must be partitioned (by chunk); an unpartitioned window may
-    only run over the per-chunk offsets table (rows bounded by task
-    count, not file count)."""
-    import re
+def test_store_without_manifest_refused(spark, tmp_path):
+    """A store that never wrote a manifest is an error naming the fix,
+    not a silent fallback to listing the filesystem."""
+    import pytest
 
+    from paddleocr_spark.functions.udfs import decode_media_store
+
+    store = str(tmp_path / "bare_store")
+    spark.range(3).write.parquet(store)
+    with pytest.raises(ValueError, match="write_store_manifest"):
+        decode_media_store(spark, store)
+
+
+def test_manifest_packing_plans_on_driver(spark):
+    """Task packing is driver-side: the packed-files plan has no
+    Exchange and no Window, and building it starts no Spark job."""
     from paddleocr_spark.functions.udfs import _store_files_df
     from paddleocr_spark.plans.inspect import formatted_plan
 
     _, media_path = entry_mod.corpus_paths(spark, SF, n_docs=50)
-    files_df = _store_files_df(spark, media_path, n_tasks=8)
-    plan = formatted_plan(files_df)
-    specs = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
-    assert specs, plan
-    for spec in specs:
-        if re.search(r"\bfile#\d+ ASC", spec):
-            # file-ordered window: first arg must be the chunk column
-            assert spec.lstrip().startswith("chunk#"), spec
+    sc = spark.sparkContext
+    group = "manifest_packing_plans_on_driver"
+    sc.setJobGroup(group, group)
+    try:
+        files_df = _store_files_df(spark, media_path, n_tasks=8)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        assert count_exchanges(files_df) == 0
+        assert "Window" not in formatted_plan(files_df)
+        # control: the job group does record jobs run under it
+        assert files_df.count() > 0
+        assert sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def test_manifest_packing_is_byte_balanced(spark):
@@ -167,24 +198,6 @@ def test_bm25_plan_shape(spark):
     assert len(re.findall(r"^\(\d+\) Scan parquet", plan, re.M)) <= 1, plan
     for s in schemas:
         assert set(s) <= {"doc_id", "text"}, s
-
-
-def test_manifest_planned_decode_matches_dataframe_decode(spark):
-    """Pointer-passing decode planned from the manifest produces the
-    same fragments as the generic DataFrame-decode path."""
-    from paddleocr_spark.functions.udfs import (
-        decode_media,
-        decode_media_store,
-    )
-
-    docs, media_df = entry_mod.load_corpus(spark, SF, n_docs=50)
-    _, media_path = entry_mod.corpus_paths(spark, SF, n_docs=50)
-    key = lambda r: (r["media_ref"], r["frag_idx"], r["box_idx"])
-    a = sorted((r.asDict() for r in
-                decode_media_store(spark, media_path).collect()), key=key)
-    b = sorted((r.asDict() for r in
-                decode_media(media_df).collect()), key=key)
-    assert a == b
 
 
 def test_simhash_single_aggregation_pass(spark):

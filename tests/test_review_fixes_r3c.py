@@ -74,10 +74,9 @@ def test_pushed_filters_in_list(spark):
 # --- checkpoint: lineage validation, atomic move, targeted release ----
 
 @pytest.fixture()
-def corpus(spark):
+def corpus(spark, media_store):
     docs = synthesize_docs(spark, 16, seed=23, heavy_frac=0.0)
-    media = synthesize_media(spark, docs, seed=23)
-    return docs, media
+    return docs, media_store(synthesize_media(spark, docs, seed=23))
 
 
 def test_resume_rejects_changed_input_snapshot(spark, corpus, tmp_path):

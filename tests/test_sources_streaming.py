@@ -27,16 +27,14 @@ def test_binary_source_page_explode(spark, tmp_path):
     assert bytes(by_path["b.bin"][0].content) == b"plain-image-bytes"
 
 
-def test_incremental_extract_matches_batch(spark, tmp_path):
+def test_incremental_extract_matches_batch(spark, tmp_path, media_store):
     """Two file-arrival waves through the stream == one batch run."""
     docs_dir = str(tmp_path / "docs")
     out_dir = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
 
     docs = synthesize_docs(spark, 12, seed=3, heavy_frac=0.0)
-    media = synthesize_media(spark, docs, seed=3)
-    media.write.mode("overwrite").parquet(str(tmp_path / "media"))
-    media = spark.read.parquet(str(tmp_path / "media"))
+    media = media_store(synthesize_media(spark, docs, seed=3))
 
     from pyspark.sql import functions as F
 
